@@ -9,9 +9,10 @@ forever on a cyclic web graph. Our engine must not, so:
   ``seen`` table on ``url_key`` — Spark shuffles both sides by the 64-bit
   key; this is the correctness contract.
 * **Scale path**: N Bloom shards, sharded by ``pmod(url_key, n_shards)``.
-  Each shard is a numpy bitset built with ``applyInPandas`` and persisted
-  as ONE binary row. Probing: candidates are co-partitioned with their
-  shard and bit-tested in vectorized numpy. Bloom answers
+  Each shard is a numpy bitset persisted as ONE binary row. Per crawl
+  wave, ONE cogroup co-partitions the candidates with their shard, bit-
+  tests them against the old bits and ORs them into the bits in the same
+  vectorized numpy pass (``bloom_probe_absorb``). Bloom answers
   "definitely-unseen" exactly (zero false negatives by construction);
   "maybe-seen" candidates (the small fraction) fall through to the exact
   anti-join. At a 10^10-URL frontier this shrinks the anti-join's left
@@ -127,233 +128,141 @@ BLOOM_SHARD_SCHEMA = T.StructType(
         T.StructField("n_shards", T.IntegerType(), False),
         T.StructField("m_bits", T.LongType(), False),
         T.StructField("k_hashes", T.IntegerType(), False),
-        T.StructField("n_items", T.LongType(), False),
         T.StructField("bits", T.BinaryType(), False),
     ]
 )
+_SHARD_COLS = [f.name for f in BLOOM_SHARD_SCHEMA.fields]
+
+
+def _shard_row(shard: int, n_shards: int, m_bits: int, k: int, bits: np.ndarray) -> pd.DataFrame:
+    return pd.DataFrame(
+        {
+            "shard": [shard],
+            "n_shards": [n_shards],
+            "m_bits": [m_bits],
+            "k_hashes": [k],
+            "bits": [bits.tobytes()],
+        }
+    )
+
+
+def _with_shard(df: DataFrame, n_shards: int) -> DataFrame:
+    return df.withColumn("shard", F.pmod(F.col("url_key"), F.lit(n_shards)).cast("int"))
 
 
 def build_bloom_shards(
-    seen: DataFrame,
-    n_shards: int = 32,
-    fp_rate: float = 0.01,
-    expected_per_shard: int | None = None,
-    geometry: tuple[int, int] | None = None,
+    seen: DataFrame, n_shards: int, geometry: tuple[int, int]
 ) -> DataFrame:
     """Build one Bloom bitset per shard from the ``seen`` table.
 
     Shard assignment ``pmod(url_key, n_shards)`` is the same hash
     partitioning Spark's own shuffle would use, so build and probe
-    co-locate for free. Each shard row is (shard, m_bits, k, n, bits) —
-    persisted as binary in the snapshot store.
+    co-locate for free. ``geometry`` (m_bits, k_hashes) is fixed once per
+    crawl from the design-point capacity, so later waves OR keys into the
+    same bitsets (:func:`bloom_probe_absorb`).
     """
-    if geometry is not None:
-        # fixed geometry (set once per crawl from the design-point capacity)
-        # so per-wave deltas can OR-merge with prior shards
-        m_bits, k = geometry
-    else:
-        if expected_per_shard is None:
-            total = seen.count()
-            expected_per_shard = max(64, total // max(n_shards, 1) + 1)
-        m_bits, k = bloom_params(expected_per_shard, fp_rate)
-
-    keyed = seen.select(
-        "url_key", F.pmod(F.col("url_key"), F.lit(n_shards)).cast("int").alias("shard")
-    )
+    m_bits, k = geometry
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf["shard"].iloc[0])
-        keys = pdf["url_key"].to_numpy(dtype=np.int64)
         bitset = np.zeros(m_bits // 64, dtype=np.uint64)
-        _set_bits(bitset, _positions(keys, m_bits, k))
-        return pd.DataFrame(
-            {
-                "shard": [shard],
-                "n_shards": [n_shards],
-                "m_bits": [m_bits],
-                "k_hashes": [k],
-                "n_items": [len(keys)],
-                "bits": [bitset.tobytes()],
-            }
-        )
+        _set_bits(bitset, _positions(pdf["url_key"].to_numpy(dtype=np.int64), m_bits, k))
+        return _shard_row(int(pdf["shard"].iloc[0]), n_shards, m_bits, k, bitset)
 
-    return keyed.groupBy("shard").applyInPandas(build, BLOOM_SHARD_SCHEMA)
-
-
-# broadcast-probe gate: total bitset bytes a driver/executor can
-# comfortably hold twice (the broadcast relation + the scan); above it
-# the cogrouped co-partitioned probe is the only scale-safe shape
-BLOOM_BROADCAST_LIMIT_BYTES = 64 << 20
-
-
-def _jvm_bloom_positions(m_bits: int, k: int) -> list:
-    """The k bit positions of ``url_key`` as JVM column expressions —
-    bit-identical to :func:`_positions` (splitmix64 double hashing),
-    pinned by test against the numpy implementation.
-
-    Spark 4 runs with ANSI semantics, so the uint64 WRAPPING add and
-    multiply of splitmix64 cannot be written as long arithmetic (it
-    would raise ARITHMETIC_OVERFLOW). Each wrapping step is instead an
-    exact DECIMAL(38) computation reduced mod 2^64 — a variable-times-
-    constant product is split on the constant's 32-bit halves so no
-    intermediate exceeds ~2^97 (well inside decimal38) — while the xor
-    and logical shifts hop back to the signed-long domain, whose bit
-    patterns equal numpy's uint64 ones."""
-    from decimal import Decimal
-
-    TWO64 = F.lit(Decimal(2**64))
-    TWO63 = F.lit(Decimal(2**63))
-    TWO32 = F.lit(Decimal(2**32))
-
-    # CASE-free domain hops, each referencing its argument exactly ONCE:
-    # a branching to_u/to_s (when/otherwise) triples its subtree per
-    # level and the chained splitmix stages then nest exponentially —
-    # the first draft produced a tree Catalyst chewed on for minutes.
-    def to_u(col):  # signed long bit pattern -> unsigned value as decimal
-        return F.pmod(col.cast("decimal(20,0)"), TWO64)
-
-    def to_s(dcol):  # unsigned decimal in [0, 2^64) -> signed long
-        return (F.pmod(dcol + TWO63, TWO64) - TWO63).cast("long")
-
-    def mulmod(dcol, c: int):  # (unsigned decimal * const) mod 2^64
-        t = dcol * F.lit(Decimal(c & 0xFFFFFFFF))
-        u = F.pmod(dcol * F.lit(Decimal(c >> 32)), TWO32) * TWO32
-        return F.pmod(t + u, TWO64)
-
-    h1u = to_u(F.col("url_key"))
-    z = F.pmod(h1u + F.lit(Decimal(0x9E3779B97F4A7C15)), TWO64)
-    zl = to_s(z)
-    z = mulmod(to_u(zl.bitwiseXOR(F.shiftrightunsigned(zl, 30))), 0xBF58476D1CE4E5B9)
-    zl = to_s(z)
-    z = mulmod(to_u(zl.bitwiseXOR(F.shiftrightunsigned(zl, 27))), 0x94D049BB133111EB)
-    zl = to_s(z)
-    h2u = to_u(zl.bitwiseXOR(F.shiftrightunsigned(zl, 31)).bitwiseOR(F.lit(1)))
-    m = F.lit(Decimal(m_bits))
-    return [
-        F.pmod(F.pmod(h1u + F.lit(Decimal(i)) * h2u, TWO64), m).cast("long")
-        for i in range(k)
-    ]
-
-
-def bloom_probe_broadcast(
-    candidates: DataFrame, shards: DataFrame, n_shards: int, geometry: tuple[int, int]
-) -> DataFrame:
-    """JVM-only bloom probe: broadcast the (tiny) shard bitsets and test
-    the k bit positions with codegen'd expressions — no shuffle of the
-    candidates, no Python boundary, bit-identical to the cogroup probe
-    (equivalence pinned by test). Callers gate on
-    ``n_shards * m_bits / 8 <= BLOOM_BROADCAST_LIMIT_BYTES``; above that
-    the co-partitioned cogroup probe is the scale path.
-
-    Bit layout: the bitset is a little-endian uint64 word array over a
-    contiguous buffer, so bit p lives in byte ``p div 8`` at in-byte
-    bit ``p mod 8`` — plain LE bit order; the byte is pulled with
-    substring (1-based) and decoded via hex/conv."""
-    m_bits, k = geometry
-    cand = candidates.withColumn(
-        "shard", F.pmod(F.col("url_key"), F.lit(n_shards)).cast("int")
+    return (
+        _with_shard(seen.select("url_key"), n_shards)
+        .groupBy("shard")
+        .applyInPandas(build, BLOOM_SHARD_SCHEMA)
     )
-    joined = cand.join(
-        F.broadcast(shards.select("shard", "bits")), "shard", "left"
-    )
-    test = F.lit(True)
-    for pos in _jvm_bloom_positions(m_bits, k):
-        byte_val = F.conv(
-            F.hex(
-                F.substring(
-                    F.col("bits"), (pos.cast("long") / F.lit(8)).cast("int") + F.lit(1), 1
-                )
-            ),
-            16,
-            10,
-        ).cast("int")
-        # python-API shiftleft only takes a literal count; 2^b with
-        # b <= 7 is exact in double, so pow() builds the mask instead
-        bit_mask = F.pow(F.lit(2), F.pmod(pos.cast("long"), F.lit(8))).cast("int")
-        test = test & (byte_val.bitwiseAND(bit_mask) != 0)
-    return joined.withColumn(
-        "maybe_seen",
-        F.when(F.col("bits").isNull(), F.lit(False)).otherwise(test),
-    ).drop("bits", "shard")
 
 
-def bloom_probe(
+def bloom_probe_absorb(
     candidates: DataFrame,
     shards: DataFrame,
     n_shards: int,
-    geometry: tuple[int, int] | None = None,
+    geometry: tuple[int, int],
 ) -> DataFrame:
-    """Annotate candidates with ``maybe_seen`` by probing their shard.
+    """Probe candidates against their shard AND OR them into it, in ONE
+    cogrouped pass (one Python crossing per crawl wave).
 
-    With ``geometry`` (m_bits, k_hashes) known (crawl config) and the
-    total bitset volume under :data:`BLOOM_BROADCAST_LIMIT_BYTES`, the
-    probe broadcasts the shard table and tests bits with pure JVM
-    expressions — no candidate shuffle, no Python boundary (guide §4.1:
-    prefer builtins). Otherwise candidates co-partition with shards on
-    the shard id; within each group the single shard row rides along
-    (cogroup) and probing is one vectorized numpy pass. Rows whose
-    shard has no bitset yet are definitely unseen. Both paths are
-    bit-identical (pinned by test_bloom_probe_jvm_matches_cogroup).
+    Per shard group: every candidate is tested against the shard's OLD
+    bits (``maybe_seen``), then every candidate key is ORed into the
+    bits. The output is one tagged frame — the candidate rows with
+    ``maybe_seen`` (``bits`` null) plus one row per shard carrying
+    ``bits``; :func:`split_probe_absorb` separates them. A shard with no
+    candidates passes through unchanged; a candidate shard with no old
+    row starts from a zero bitset of the given ``geometry`` (its
+    candidates are definitely unseen).
 
-    The crawl wave loop deliberately does NOT pass geometry: its plans
-    reference the probe from several concurrent write jobs and the
-    broadcast variant's large expression tree measured slower per wave
-    there (see plans/crawl.py). The broadcast path is the right shape
-    when the probe output feeds ONE action — or when shuffling the
-    candidate set is the dominant cost.
+    ORing ALL candidates sets exactly the bits that ORing only the
+    unseen ones would: a candidate that is not new is already in the
+    seen set, whose keys all have their bits set (no false negatives),
+    and OR is idempotent.
 
     ``n_shards`` is REQUIRED (it is crawl config, CrawlConfig.n_bloom_shards):
     deriving it from the shards side would launch a Spark job mid-plan.
     """
-    if (
-        geometry is not None
-        and n_shards * geometry[0] // 8 <= BLOOM_BROADCAST_LIMIT_BYTES
-    ):
-        return bloom_probe_broadcast(candidates, shards, n_shards, geometry)
-    cand = candidates.withColumn(
-        "shard", F.pmod(F.col("url_key"), F.lit(n_shards)).cast("int")
-    )
+    m_bits, k = geometry
+    cand = _with_shard(candidates, n_shards)
+    # every column nullable: candidate rows leave the shard columns
+    # empty and the shard row leaves the candidate columns empty
+    fields = [
+        T.StructField(f.name, f.dataType, True)
+        for f in cand.schema.fields
+        + [T.StructField("maybe_seen", T.BooleanType())]
+        + [f for f in BLOOM_SHARD_SCHEMA.fields if f.name != "shard"]
+    ]
+    out_schema = T.StructType(fields)
+    out_cols = [f.name for f in fields]
 
-    out_schema = T.StructType(cand.schema.fields + [T.StructField("maybe_seen", T.BooleanType(), False)])
-
-    def probe(cand_pdf, shard_pdf):
-        if len(cand_pdf) == 0:
-            return pd.DataFrame(columns=[f.name for f in out_schema.fields])
-        if len(shard_pdf) == 0:
-            res = cand_pdf.copy()
-            res["maybe_seen"] = False
-            return res
-        m_bits = int(shard_pdf["m_bits"].iloc[0])
-        k = int(shard_pdf["k_hashes"].iloc[0])
-        bitset = np.frombuffer(shard_pdf["bits"].iloc[0], dtype=np.uint64)
-        keys = cand_pdf["url_key"].to_numpy(dtype=np.int64)
-        res = cand_pdf.copy()
-        res["maybe_seen"] = _test_bits(bitset, _positions(keys, m_bits, k))
-        return res
+    def probe_absorb(key, cand_pdf: pd.DataFrame, shard_pdf: pd.DataFrame) -> pd.DataFrame:
+        if len(shard_pdf):
+            mb = int(shard_pdf["m_bits"].iloc[0])
+            kh = int(shard_pdf["k_hashes"].iloc[0])
+            bits = np.frombuffer(shard_pdf["bits"].iloc[0], dtype=np.uint64).copy()
+        else:
+            mb, kh = m_bits, k
+            bits = np.zeros(m_bits // 64, dtype=np.uint64)
+        probed = cand_pdf.copy()
+        if len(probed):
+            pos = _positions(probed["url_key"].to_numpy(dtype=np.int64), mb, kh)
+            probed["maybe_seen"] = _test_bits(bits, pos)
+            _set_bits(bits, pos)
+        # int/bool columns go to object first: concat with the shard row's
+        # missing cells would otherwise promote them to float64 and round
+        # 64-bit url_keys
+        exact = [c for c in probed.columns if probed[c].dtype.kind in "iub"]
+        probed = probed.astype({c: object for c in exact})
+        row = _shard_row(int(key[0]), n_shards, mb, kh, bits)
+        return pd.concat([probed, row], ignore_index=True).reindex(columns=out_cols)
 
     return (
         cand.groupBy("shard")
         .cogroup(shards.groupBy("shard"))
-        .applyInPandas(probe, out_schema)
-        .drop("shard")
+        .applyInPandas(probe_absorb, out_schema)
+    )
+
+
+def split_probe_absorb(fused: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(probed candidates with ``maybe_seen``, next shard table) of a
+    :func:`bloom_probe_absorb` frame."""
+    is_shard = F.col("bits").isNotNull()
+    return (
+        fused.filter(~is_shard).drop(*_SHARD_COLS),
+        fused.filter(is_shard).select(*_SHARD_COLS),
     )
 
 
 def bloom_filtered_unseen(
-    candidates: DataFrame,
-    shards: DataFrame,
-    seen: DataFrame,
-    n_shards: int,
-    seen_buckets: int | None = None,
+    probed: DataFrame, seen: DataFrame, seen_buckets: int | None = None
 ) -> DataFrame:
     """The production dedup plan: bloom prefilter, exact confirm.
 
-    definitely-unseen (bloom negative) pass straight through (bloom has
-    zero false negatives); maybe-seen survivors get the exact anti-join.
-    With ``seen_buckets`` set (and ``seen`` carrying the bucket
-    partition column), the confirm scans only the survivors' buckets
-    (:func:`bucketed_confirm_unseen`)."""
-    probed = bloom_probe(candidates, shards, n_shards=n_shards)
+    ``probed`` is the candidate half of :func:`split_probe_absorb`.
+    Definitely-unseen (bloom negative) rows pass straight through (bloom
+    has zero false negatives); maybe-seen survivors get the exact
+    anti-join. With ``seen_buckets`` set (and ``seen`` carrying the
+    bucket partition column), the confirm scans only the survivors'
+    buckets (:func:`bucketed_confirm_unseen`)."""
     definite = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
     maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
     if seen_buckets:
@@ -361,79 +270,6 @@ def bloom_filtered_unseen(
     else:
         confirmed_unseen = anti_join_unseen(maybe, seen)
     return definite.unionByName(confirmed_unseen)
-
-
-def absorb_keys_into_shards(
-    shards: DataFrame,
-    new_keys: DataFrame,
-    n_shards: int,
-    geometry: tuple[int, int],
-) -> DataFrame:
-    """OR the ``new_keys`` (url_key rows) directly into the existing
-    shard bitsets in ONE cogrouped pass — equivalent to
-    ``merge_bloom_shards(shards, build_bloom_shards(new_keys, ...))``
-    but with a single Python-boundary shuffle stage instead of two
-    (build's groupBy-applyInPandas + merge's groupBy-applyInPandas):
-    the per-wave bloom update is pure fixed overhead at small waves and
-    one fewer full stage at any scale. Shards absent on the old side
-    (fresh crawl, or a shard that never saw a key) are created with the
-    given ``geometry``."""
-    m_bits, k = geometry
-    keyed = new_keys.select(
-        "url_key",
-        F.pmod(F.col("url_key"), F.lit(n_shards)).cast("int").alias("shard"),
-    )
-
-    def absorb(key, keys_pdf: pd.DataFrame, shard_pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(key[0])
-        if len(shard_pdf):
-            bits = np.frombuffer(shard_pdf["bits"].iloc[0], dtype=np.uint64).copy()
-            n_old = int(shard_pdf["n_items"].iloc[0])
-            mb = int(shard_pdf["m_bits"].iloc[0])
-            kh = int(shard_pdf["k_hashes"].iloc[0])
-        else:
-            bits = np.zeros(m_bits // 64, dtype=np.uint64)
-            n_old, mb, kh = 0, m_bits, k
-        if len(keys_pdf):
-            keys = keys_pdf["url_key"].to_numpy(dtype=np.int64)
-            _set_bits(bits, _positions(keys, mb, kh))
-        return pd.DataFrame(
-            {
-                "shard": [shard],
-                "n_shards": [n_shards],
-                "m_bits": [mb],
-                "k_hashes": [kh],
-                "n_items": [n_old + len(keys_pdf)],
-                "bits": [bits.tobytes()],
-            }
-        )
-
-    return (
-        keyed.groupBy("shard")
-        .cogroup(shards.groupBy("shard"))
-        .applyInPandas(absorb, BLOOM_SHARD_SCHEMA)
-    )
-
-
-def merge_bloom_shards(old: DataFrame, delta: DataFrame) -> DataFrame:
-    """OR-merge two shard sets with identical (n_shards, m_bits, k).
-
-    This is how the seen-set grows incrementally: per wave, build shards
-    for just the NEW urls (``build_bloom_shards`` with the same geometry)
-    and OR them into the previous snapshot's shards — no full-seen rescan.
-    """
-    both = old.unionByName(delta)
-
-    def combine(pdf: pd.DataFrame) -> pd.DataFrame:
-        bits = np.frombuffer(pdf["bits"].iloc[0], dtype=np.uint64).copy()
-        for b in pdf["bits"].iloc[1:]:
-            bits |= np.frombuffer(b, dtype=np.uint64)
-        out = pdf.iloc[[0]].copy()
-        out["n_items"] = int(pdf["n_items"].sum())
-        out["bits"] = [bits.tobytes()]
-        return out
-
-    return both.groupBy("shard").applyInPandas(combine, BLOOM_SHARD_SCHEMA)
 
 
 # ------------------------------------------------------------ cuckoo filter

@@ -285,27 +285,12 @@ def run_crawl(
         manifest = store.manifest(last)
         base_path = manifest["tables"]["frontier_base"]
         delta_paths = list(manifest["tables"].get("frontier_deltas", []))
-        if "seen_base" in manifest["tables"]:
-            seen_base_path = manifest["tables"]["seen_base"]
-            seen_delta_paths = list(manifest["tables"].get("seen_deltas", []))
-        else:
-            # legacy snapshot (pre seen-compaction manifests): the seen
-            # set lives as ONE table per wave under each wave's 'seen'
-            # key. Falling back to wave 0 alone would silently collapse
-            # the seen set to the seeds and re-schedule every URL
-            # discovered in waves 1..last (ADVICE r4 medium) — so
-            # reconstruct it as the union of all per-wave tables.
-            legacy = [
-                store.manifest(w)["tables"]["seen"]
-                for w in range(0, last + 1)
-                if "seen" in store.manifest(w)["tables"]
-            ]
-            seen_base_path = legacy[0] if legacy else store.table_dir("seen", 0)
-            seen_delta_paths = legacy[1:]
+        seen_base_path = manifest["tables"]["seen_base"]
+        seen_delta_paths = list(manifest["tables"]["seen_deltas"])
         shards = store.read("bloom_shards", last)
         wave = last
         if cfg.seen_buckets:
-            # resuming a FLAT/legacy snapshot with buckets enabled would
+            # resuming a FLAT snapshot with buckets enabled would
             # fill seen_bucket with NULLs and the confirm's bucket IN
             # filter would prune EVERY seen row — already-crawled URLs
             # silently re-enter the frontier. Fail loudly instead.
@@ -529,41 +514,23 @@ def run_crawl(
         seen_df = _read_seen(
             spark, seen_base_path, seen_delta_paths, bool(cfg.seen_buckets)
         )
-        if cfg.seen_buckets:
-            # the bucketed confirm collects the wave's candidate-bucket
-            # set eagerly; persist children so that tiny job does not
-            # recompute the expansion
-            children = children.persist()
-        probed = None
+        # ONE cogroup probes the children against the old bits and ORs
+        # them into the next wave's shards. PERSISTED: the probed rows
+        # feed the definite/maybe union and the shard rows feed their
+        # own write, and without the cache each consumer re-runs the
+        # expansion + cogroup (the wave's expensive stages). Without
+        # the bloom the shards still take this one update path and
+        # maybe_seen is ignored.
+        fused = dd.bloom_probe_absorb(
+            children, shards, cfg.n_bloom_shards, geometry
+        ).persist()
+        probed, shards = dd.split_probe_absorb(fused)
         if cfg.use_bloom:
-            # inlined bloom_filtered_unseen with the probed rows
-            # PERSISTED: its definite/maybe branches re-enter a union,
-            # and without the cache each branch re-runs the whole
-            # expansion + cogroup probe chain (the wave's expensive
-            # stages, measured twice per wave)
-            # deliberately the cogroup probe, NOT bloom_probe_broadcast:
-            # the broadcast/JVM variant measured SLOWER per wave here
-            # (warm 4-wave loop 22.0/29.4 s -> 41.8/53.9 s, interleaved
-            # A/B) — its ANSI-safe decimal splitmix expressions bloat
-            # every wave plan that references the probe, and the wave's
-            # concurrent write jobs each re-analyze that tree before
-            # the persist materializes
-            probed = dd.bloom_probe(
-                children, shards, n_shards=cfg.n_bloom_shards
-            ).persist()
-            definite = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-            maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-            if cfg.seen_buckets:
-                confirmed = dd.bucketed_confirm_unseen(
-                    maybe, seen_df, cfg.seen_buckets
-                )
-            else:
-                confirmed = dd.anti_join_unseen(maybe, seen_df)
-            new_rows = definite.unionByName(confirmed)
+            new_rows = dd.bloom_filtered_unseen(probed, seen_df, cfg.seen_buckets)
         else:
-            new_rows = dd.anti_join_unseen(children, seen_df)
-        # the expand+dedup pipeline feeds THREE writes (frontier delta,
-        # seen delta, bloom delta) — persist once instead of recomputing
+            new_rows = dd.anti_join_unseen(probed.drop("maybe_seen"), seen_df)
+        # the dedup result feeds the frontier delta, the seen delta and
+        # the stats job — persist once instead of recomputing
         new_rows = new_rows.persist()
 
         # 6. assemble the wave's UPSERT DELTA: rows that changed state
@@ -590,18 +557,12 @@ def run_crawl(
             DELTA_WAVE, F.lit(wave)
         )
 
-        seen_delta = new_rows.select("url_key", "url_canon").unionByName(
-            denied.select("url_key", "url_canon").join(
-                seen_df.select("url_key"), "url_key", "left_anti"
-            )
-        ).distinct().persist()
-        # one cogrouped pass ORs the wave's new keys straight into the
-        # existing bitsets — replaces build_bloom_shards +
-        # merge_bloom_shards (two Python-boundary shuffle stages per
-        # wave, pure fixed overhead at small waves)
-        shards = dd.absorb_keys_into_shards(
-            shards, seen_delta.select("url_key"), cfg.n_bloom_shards, geometry
-        )
+        # every pending row (hence every denied one) is already seen:
+        # seeds and discovered rows enter the seen set with the wave
+        # that adds them to the frontier. new_rows is unique per
+        # url_canon (expand_wave's keep-first window; definite and
+        # confirmed are disjoint), so it IS the seen delta.
+        seen_delta = new_rows.select("url_key", "url_canon")
         fetch_log = scheduled.select(
             "url_canon", "host", F.lit(wave).alias("wave_id"), "fetch_slot"
         )
@@ -724,11 +685,7 @@ def run_crawl(
         # PREVIOUS wave's frames were retired when this wave's stats
         # landed, keeping at most two waves of blocks resident.
         _retire_now()
-        retire.extend([scheduled, new_rows, seen_delta, pending])
-        if probed is not None:
-            retire.append(probed)
-        if cfg.seen_buckets:
-            retire.append(children)
+        retire.extend([scheduled, new_rows, fused, pending])
         pending = pending_next
         n_pending = counts.get("pending_next", 0)
 
@@ -907,16 +864,15 @@ def _enqueue_pending_delta(
     delta = refresh_rows.withColumn(DELTA_WAVE, F.lit(wave))
     delta_path = store.write(delta, "frontier_delta", wave)
     n = spark.read.parquet(delta_path).count()
+    # copy the seen state; the append-style 'seen' per-wave key is NOT
+    # copied (read_appended over it would double-count the path)
     tables = {
         "frontier_base": base_path,
         "frontier_deltas": delta_paths + [delta_path],
         "bloom_shards": manifest["tables"]["bloom_shards"],
+        "seen_base": manifest["tables"]["seen_base"],
+        "seen_deltas": manifest["tables"]["seen_deltas"],
     }
-    # copy the seen state; the append-style 'seen' per-wave key is NOT
-    # copied (read_appended over it would double-count the path)
-    for key in ("seen_base", "seen_deltas"):
-        if key in manifest["tables"]:
-            tables[key] = manifest["tables"][key]
     store.commit(wave, tables, {"wave": wave, "refresh_enqueued": n})
     return n
 

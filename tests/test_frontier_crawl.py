@@ -242,3 +242,76 @@ def test_recrawl_clamps_malformed_history(spark):
     assert pr[1].lambda_per_day == 2.5  # (2 + 0.5) / (0 + 1)
     assert pr[1].age_days == 50.0 and pr[1].staleness == 125.0
     assert pr[2].age_days == 0.0 and pr[2].staleness == 0.0 and not pr[2].due
+
+
+@pytest.fixture(scope="module")
+def denied_retry_crawl(spark, tmp_path_factory):
+    """A crawl killed after wave 2 and resumed to the end, with a robots
+    deny (``sub1``), a page that fails once and then succeeds
+    (``doc0.pdf``), a page that always fails (``sub0/doc1.pdf``) and a
+    per-host budget of 2 that defers a pending row at wave 2."""
+    from sharepointcrawler_spark.operators.robots import ROBOTS_SCHEMA
+
+    root = sg.balanced_tree(depth=2, files_per_folder=2, folders_per_folder=2)
+    edges_df = spark.createDataFrame(
+        sg.edges_from_tree(root),
+        "parent_url string, child_url string, kind string, sibling_idx int",
+    )
+    robots_df = spark.createDataFrame(
+        [("site.example.com", "deny", "/lib/sub1", None)], ROBOTS_SCHEMA
+    )
+
+    def fetch_probe(scheduled):
+        flaky = F.col("url_canon").endswith("/lib/doc0.pdf") & (F.col("attempt") == 0)
+        broken = F.col("url_canon").endswith("/lib/sub0/doc1.pdf")
+        return scheduled.select("url_key", (~(flaky | broken)).alias("fetch_ok"))
+
+    cfg = CrawlConfig(per_host_wave_budget=2, max_fetch_attempts=2)
+    store = SnapshotStore(spark, str(tmp_path_factory.mktemp("denied_retry")))
+    kw = dict(robots_df=robots_df, config=cfg, fetch_probe=fetch_probe)
+    killed = run_crawl(
+        spark, store, graph_expander(edges_df), seeds=[(root.url, 0)],
+        resume=False, stop_after_wave=2, **kw,
+    )
+    killed_keys = {r.url_key for r in killed.frontier.collect()}
+    killed_seen = {r.url_key for r in killed.seen.collect()}
+    killed_states = {r.state for r in killed.frontier.collect()}
+    res = run_crawl(spark, store, graph_expander(edges_df), resume=True, **kw)
+    return cfg, store, killed_keys, killed_seen, killed_states, res
+
+
+def test_pending_rows_are_always_seen(denied_retry_crawl):
+    """Every frontier row — pending (deferred or retrying), denied or
+    failed — has its url_key in the seen set, at the kill and at the
+    end: the seen delta is exactly the wave's new discoveries."""
+    _, _, killed_keys, killed_seen, killed_states, res = denied_retry_crawl
+    assert {"pending", "denied"} <= killed_states
+    assert killed_keys <= killed_seen
+    states = {r.state for r in res.frontier.collect()}
+    assert {"fetched", "denied", "failed"} <= states
+    assert {r.url_key for r in res.frontier.collect()} <= {
+        r.url_key for r in res.seen.collect()
+    }
+
+
+def test_bloom_shards_equal_build_over_seen(spark, denied_retry_crawl):
+    """After a kill and a resume, the crawl's incrementally updated bloom
+    shards equal a one-shot build over the final seen set: same shard
+    set, byte-identical bits."""
+    from sharepointcrawler_spark.operators import dedup as dd
+
+    cfg, store, _, _, _, res = denied_retry_crawl
+    geometry = dd.bloom_params(
+        max(cfg.bloom_capacity // cfg.n_bloom_shards, 64), cfg.bloom_fp_rate
+    )
+    got = {
+        r["shard"]: r["bits"]
+        for r in store.read("bloom_shards", store.latest_wave()).collect()
+    }
+    want = {
+        r["shard"]: r["bits"]
+        for r in dd.build_bloom_shards(
+            res.seen, n_shards=cfg.n_bloom_shards, geometry=geometry
+        ).collect()
+    }
+    assert got == want

@@ -11,13 +11,14 @@ from pyspark.sql import functions as F
 
 from sharepointcrawler_spark.functions.urlnorm import with_url_columns
 from sharepointcrawler_spark.operators.dedup import (
+    BLOOM_SHARD_SCHEMA,
     CuckooFilter,
     anti_join_unseen,
     bloom_filtered_unseen,
-    bloom_probe,
-    build_bloom_shards,
-    merge_bloom_shards,
     bloom_params,
+    bloom_probe_absorb,
+    build_bloom_shards,
+    split_probe_absorb,
 )
 from sharepointcrawler_spark.operators.politeness import (
     assign_fetch_slots,
@@ -84,12 +85,17 @@ def test_salt_hosts_spreads_hot_host(spark, wave):
     assert n_buckets == 8
 
 
+def _probe_absorb(cands, shards, n_shards, geometry):
+    return split_probe_absorb(bloom_probe_absorb(cands, shards, n_shards, geometry))
+
+
 def test_bloom_zero_false_negatives(spark):
     urls = [(f"https://h{i % 17}.com/x{i}",) for i in range(5000)]
     df = with_url_columns(spark.createDataFrame(urls, ["url"]))
     seen = df.select("url_key", "url_canon")
-    shards = build_bloom_shards(seen, n_shards=8, fp_rate=0.01)
-    probed = bloom_probe(seen, shards, n_shards=8)
+    geom = bloom_params(5000 // 8 + 1, 0.01)
+    shards = build_bloom_shards(seen, n_shards=8, geometry=geom)
+    probed, _ = _probe_absorb(seen, shards, 8, geom)
     # every seen key MUST be maybe_seen (zero false negatives)
     assert probed.filter(~F.col("maybe_seen")).count() == 0
 
@@ -99,23 +105,56 @@ def test_bloom_filtered_unseen_equals_exact(spark):
         spark.createDataFrame([(f"https://s.com/a{i}",) for i in range(2000)], ["url"])
     )
     seen = base.filter(F.col("url_key") % 2 == 0).select("url_key", "url_canon")
-    shards = build_bloom_shards(seen, n_shards=4)
+    geom = bloom_params(2000 // 4 + 1, 0.01)
+    shards = build_bloom_shards(seen, n_shards=4, geometry=geom)
     cands = base.select("url", "url_canon", "url_key")
-    got = {r.url_canon for r in bloom_filtered_unseen(cands, shards, seen, n_shards=4).collect()}
+    probed, _ = _probe_absorb(cands, shards, 4, geom)
+    got = {r.url_canon for r in bloom_filtered_unseen(probed, seen).collect()}
     want = {r.url_canon for r in anti_join_unseen(cands, seen).collect()}
     assert got == want  # bloom path == exact oracle path
 
 
 def test_bloom_merge_incremental(spark):
+    """Two batches ORed into initially empty shards, one cogroup each:
+    afterwards every key of both batches probes maybe_seen."""
     a = with_url_columns(spark.createDataFrame([(f"https://m.com/{i}",) for i in range(500)], ["url"]))
     b = with_url_columns(spark.createDataFrame([(f"https://m.com/{i}",) for i in range(500, 1000)], ["url"]))
     geom = bloom_params(1000, 0.01)
-    sa = build_bloom_shards(a.select("url_key", "url_canon"), n_shards=4, geometry=geom)
-    sb = build_bloom_shards(b.select("url_key", "url_canon"), n_shards=4, geometry=geom)
-    merged = merge_bloom_shards(sa, sb)
+    empty = spark.createDataFrame([], BLOOM_SHARD_SCHEMA)
+    _, sa = _probe_absorb(a.select("url_key", "url_canon"), empty, 4, geom)
+    _, sab = _probe_absorb(b.select("url_key", "url_canon"), sa, 4, geom)
     both = a.unionByName(b).select("url", "url_canon", "url_key")
-    probed = bloom_probe(both, merged, n_shards=4)
+    probed, _ = _probe_absorb(both, sab, 4, geom)
     assert probed.filter(~F.col("maybe_seen")).count() == 0
+
+
+def test_bloom_absorb_equals_build_over_union(spark):
+    """Absorbing a batch into built shards gives the shards a build over
+    the union gives: same shard set, byte-identical bits. Batch ``a``
+    covers shards 0-3 and batch ``b`` only even shards, so shards 4 and
+    6 are created fresh and shards 1 and 3 pass through untouched."""
+    a = with_url_columns(
+        spark.createDataFrame([(f"https://m.com/{i}",) for i in range(500)], ["url"])
+    ).filter(F.pmod("url_key", F.lit(8)) < 4)
+    b = with_url_columns(
+        spark.createDataFrame(
+            [(f"https://n.com/{i}",) for i in range(500, 700)], ["url"]
+        )
+    ).filter(F.col("url_key") % 2 == 0)
+    geom = bloom_params(1000, 0.01)
+    sa = build_bloom_shards(a.select("url_key", "url_canon"), n_shards=8, geometry=geom)
+    old = {r["shard"]: r["bits"] for r in sa.collect()}
+    _, absorbed = _probe_absorb(b.select("url_key", "url_canon"), sa, 8, geom)
+    got = {r["shard"]: r["bits"] for r in absorbed.collect()}
+    want = {
+        r["shard"]: r["bits"]
+        for r in build_bloom_shards(
+            a.unionByName(b).select("url_key", "url_canon"), n_shards=8, geometry=geom
+        ).collect()
+    }
+    assert set(old) == {0, 1, 2, 3}
+    assert {4, 6} <= set(got) and got[1] == old[1] and got[3] == old[3]
+    assert got == want
 
 
 def test_cuckoo_filter_roundtrip():
@@ -132,40 +171,3 @@ def test_cuckoo_filter_roundtrip():
     # serialization round-trip
     cf2 = CuckooFilter.from_bytes(cf.to_bytes())
     assert all(cf2.contains(k) for k in keys[100:])
-
-
-def test_bloom_absorb_equals_build_plus_merge(spark):
-    """absorb_keys_into_shards (the crawl wave's one-pass bloom update)
-    must produce bit-identical shards to merge(build(delta)) — same
-    bitsets, same item counts, including shards with no new keys and
-    shards that never existed before."""
-    from sharepointcrawler_spark.operators.dedup import absorb_keys_into_shards
-
-    a = with_url_columns(
-        spark.createDataFrame([(f"https://m.com/{i}",) for i in range(500)], ["url"])
-    )
-    # delta hits only SOME shards (even keys), so pass-through and
-    # fresh-shard branches are both exercised
-    b = with_url_columns(
-        spark.createDataFrame(
-            [(f"https://n.com/{i}",) for i in range(500, 700)], ["url"]
-        )
-    ).filter(F.col("url_key") % 2 == 0)
-    geom = bloom_params(1000, 0.01)
-    sa = build_bloom_shards(a.select("url_key", "url_canon"), n_shards=8, geometry=geom)
-    want = {
-        r["shard"]: (r["n_items"], r["bits"])
-        for r in merge_bloom_shards(
-            sa,
-            build_bloom_shards(
-                b.select("url_key", "url_canon"), n_shards=8, geometry=geom
-            ),
-        ).collect()
-    }
-    got = {
-        r["shard"]: (r["n_items"], r["bits"])
-        for r in absorb_keys_into_shards(
-            sa, b.select("url_key"), n_shards=8, geometry=geom
-        ).collect()
-    }
-    assert got == want

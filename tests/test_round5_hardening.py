@@ -3,9 +3,6 @@
 1. Corrupt blobs that pass the signature check must yield NULL-stat
    rows, not crash the Spark task (decoders raise zlib.error /
    struct.error / KeyError beyond ValueError).
-2. Resuming a legacy snapshot whose manifests predate seen_base /
-   seen_deltas must reconstruct the seen set from the per-wave tables,
-   not collapse it to the wave-0 seeds.
 3. IVF centroid training samples by hash order, so an id-correlated
    (content-sorted) corpus still trains a representative quantizer.
 4. A Type0 font with CIDs missing from its ToUnicode CMap trips strict
@@ -134,68 +131,6 @@ def test_corrupt_blobs_yield_null_rows_not_task_crash(spark):
     wav_stats = {r.doc_id: r for r in mm.decode_wav_stats(wav_df).collect()}
     assert wav_stats[20].sample_sum == int(np.arange(16).sum())
     assert wav_stats[21].sample_sum is None
-
-
-# ------------------------------------- 2. legacy-manifest resume
-
-
-def test_resume_from_legacy_manifest_keeps_full_seen_set(spark, tmp_path):
-    """Strip seen_base/seen_deltas from every committed manifest (the
-    pre-compaction layout, which carried one 'seen' table per wave) and
-    resume: the crawl must NOT re-discover URLs from waves 1..k. The
-    old fallback collapsed the seen set to the wave-0 seeds (ADVICE r4
-    medium)."""
-    from sharepointcrawler_spark.operators.frontier import graph_expander
-    from sharepointcrawler_spark.plans.crawl import CrawlConfig, run_crawl
-    from sharepointcrawler_spark.plans.snapshot import SnapshotStore
-    from sharepointcrawler_spark.sources import sitegraph as sg
-
-    root = sg.balanced_tree(depth=3, files_per_folder=2, folders_per_folder=2)
-    edges = spark.createDataFrame(
-        sg.edges_from_tree(root),
-        "parent_url string, child_url string, kind string, sibling_idx int",
-    )
-    cfg = CrawlConfig(compact_every=0)
-
-    # uninterrupted reference run
-    ref_store = SnapshotStore(spark, str(tmp_path / "ref"))
-    ref = run_crawl(
-        spark, ref_store, graph_expander(edges), seeds=[(root.url, 0)],
-        config=cfg, resume=False,
-    )
-    ref_seen = {r.url_key for r in ref.seen.collect()}
-
-    # interrupted run, then manifests rewritten to the legacy shape
-    store = SnapshotStore(spark, str(tmp_path / "legacy"))
-    run_crawl(
-        spark, store, graph_expander(edges), seeds=[(root.url, 0)],
-        config=cfg, resume=False, stop_after_wave=2,
-    )
-    last = store.latest_wave()
-    assert last == 2
-    for w in range(0, last + 1):
-        p = store._manifest_path(w)
-        with open(p) as f:
-            m = json.load(f)
-        m["tables"].pop("seen_base", None)
-        m["tables"].pop("seen_deltas", None)
-        assert "seen" in m["tables"]  # the legacy per-wave table
-        with open(p, "w") as f:
-            json.dump(m, f)
-
-    res = run_crawl(
-        spark, store, graph_expander(edges), seeds=None, config=cfg, resume=True,
-    )
-    assert {r.url_key for r in res.seen.collect()} == ref_seen
-    # no wave after the resume re-discovers already-seen URLs: total
-    # discovered across BOTH runs == the unique URL count
-    n_unique = len(ref_seen)
-    discovered = sum(m["discovered_new"] for m in res.metrics)
-    pre = sum(
-        store.manifest(w)["stats"].get("discovered_new", 0) for w in (1, 2)
-    )
-    seeds_n = 1
-    assert seeds_n + pre + discovered == n_unique
 
 
 # --------------------------------- 3. representative IVF sampling

@@ -15,6 +15,8 @@
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -350,7 +352,11 @@ def test_wave_stats_run_as_single_action(spark, tmp_path, monkeypatch):
     Asserted by counting DataFrame actions directly: raw statusTracker
     job ids are AQE-noise-dominated (every adaptive query stage
     materializes as its own scheduler job), so the action count is the
-    stable unit of per-wave driver overhead."""
+    stable unit of per-wave driver overhead.
+
+    The bloom crosses into Python once per wave: the planned bloom-shard
+    and frontier-delta writes each hold exactly ONE
+    FlatMapCoGroupsInPandas node (the fused probe + shard update)."""
     from sharepointcrawler_spark.operators.frontier import graph_expander
     from sharepointcrawler_spark.plans.crawl import CrawlConfig, run_crawl
     from sharepointcrawler_spark.plans.snapshot import SnapshotStore
@@ -383,6 +389,21 @@ def test_wave_stats_run_as_single_action(spark, tmp_path, monkeypatch):
         calls["collect"] += 1
         return orig_collect(self)
 
+    cogroups: dict[str, list[set[str]]] = {"bloom_shards": [], "frontier_delta": []}
+    orig_write = store.write
+
+    def planned_write(df, name, wave, *args, **kwargs):
+        if name in cogroups:
+            # the python function of each cogroup node; a persisted frame
+            # that feeds both sides of a union prints twice, under fresh
+            # attribute ids, so nodes are told apart by function
+            plan = df._jdf.queryExecution().analyzed().toString()
+            cogroups[name].append(
+                set(re.findall(r"FlatMapCoGroupsInPandas [^(]*?(\w+)\(", plan))
+            )
+        return orig_write(df, name, wave, *args, **kwargs)
+
+    monkeypatch.setattr(store, "write", planned_write)
     monkeypatch.setattr(DataFrame, "count", counting_count)
     monkeypatch.setattr(DataFrame, "collect", counting_collect)
     res = run_crawl(
@@ -396,6 +417,10 @@ def test_wave_stats_run_as_single_action(spark, tmp_path, monkeypatch):
     assert calls["collect"] == waves_tracked, (
         f"expected one stats collect per wave ({waves_tracked}): {calls}"
     )
+    assert cogroups == {
+        "bloom_shards": [{"probe_absorb"}] * waves_tracked,
+        "frontier_delta": [{"probe_absorb"}] * waves_tracked,
+    }, cogroups
 
 
 # --------------------------------------- 6. near-dup component merge
