@@ -334,6 +334,54 @@ def build_lang_profiles(k: int = NGRAM_PROFILE_K) -> list[tuple[str, str, int]]:
     return rows
 
 
+def lang_ngram_predict_udf(k: int = NGRAM_PROFILE_K):
+    """The Arrow UDF behind :func:`lang_id_ngram`: a space-padded
+    ``[a-z ]`` string -> language code, 'und' for a null string or one
+    too short to hold a trigram."""
+    langs = list(LANG_SEED_TEXTS)
+    n_langs = len(langs)
+    # trigram -> per-language rank vector (0 = absent), langs in
+    # lang_ord order so np.argmin's first-minimum IS the (dist,
+    # lang_ord) tie-break of the published method / the SQL oracle.
+    prof_map: dict[int, "np.ndarray"] = {}
+    for lang, tri, rank in build_lang_profiles(k):
+        code = int.from_bytes(tri.encode("ascii"), "big")
+        vec = prof_map.get(code)
+        if vec is None:
+            vec = np.zeros(n_langs, dtype=np.int64)
+            prof_map[code] = vec
+        vec[langs.index(lang)] = rank
+
+    @F.pandas_udf("string")
+    def _predict(batch: pd.Series) -> pd.Series:
+        zero = np.zeros(n_langs, dtype=np.int64)
+        out = []
+        for p in batch:
+            if not isinstance(p, str):
+                out.append("und")
+                continue
+            a = np.frombuffer(p.encode("ascii"), dtype=np.uint8).astype(np.int64)
+            if len(a) < 3:
+                out.append("und")  # zero trigrams: no evidence
+                continue
+            codes = (a[:-2] << 16) | (a[1:-1] << 8) | a[2:]
+            uniq, cnt = np.unique(codes, return_counts=True)
+            # top-k by (count desc, trigram asc); big-endian byte codes
+            # order exactly like the trigram strings (same-length ASCII)
+            order = np.lexsort((uniq, -cnt))[:k]
+            top = uniq[order]
+            m = len(top)
+            ranks = np.empty((m, n_langs), dtype=np.int64)
+            for i in range(m):
+                ranks[i] = prof_map.get(int(top[i]), zero)
+            doc_rank = np.arange(1, m + 1, dtype=np.int64)[:, None]
+            dist = np.where(ranks > 0, np.abs(doc_rank - ranks), k).sum(axis=0)
+            out.append(langs[int(np.argmin(dist))])
+        return pd.Series(out, dtype=object)
+
+    return _predict
+
+
 def lang_id_ngram(
     docs,
     text_col: str = "text",
@@ -363,46 +411,7 @@ def lang_id_ngram(
     c = F.col(text_col)
     norm = F.trim(F.regexp_replace(F.lower(c), "[^a-z]+", " "))
     padded = F.when(norm != "", F.concat(F.lit(" "), norm, F.lit(" ")))
-
-    langs = list(LANG_SEED_TEXTS)
-    n_langs = len(langs)
-    # trigram -> per-language rank vector (0 = absent), langs in
-    # lang_ord order so np.argmin's first-minimum IS the (dist,
-    # lang_ord) tie-break of the published method / the SQL oracle.
-    prof_map: dict[int, "np.ndarray"] = {}
-    for lang, tri, rank in build_lang_profiles(k):
-        code = int.from_bytes(tri.encode("ascii"), "big")
-        vec = prof_map.get(code)
-        if vec is None:
-            vec = np.zeros(n_langs, dtype=np.int64)
-            prof_map[code] = vec
-        vec[langs.index(lang)] = rank
-
-    @F.pandas_udf("string")
-    def _predict(batch: pd.Series) -> pd.Series:
-        zero = np.zeros(n_langs, dtype=np.int64)
-        out = []
-        for p in batch:
-            if not isinstance(p, str):
-                out.append("und")
-                continue
-            a = np.frombuffer(p.encode("ascii"), dtype=np.uint8).astype(np.int64)
-            codes = (a[:-2] << 16) | (a[1:-1] << 8) | a[2:]
-            uniq, cnt = np.unique(codes, return_counts=True)
-            # top-k by (count desc, trigram asc); big-endian byte codes
-            # order exactly like the trigram strings (same-length ASCII)
-            order = np.lexsort((uniq, -cnt))[:k]
-            top = uniq[order]
-            m = len(top)
-            ranks = np.empty((m, n_langs), dtype=np.int64)
-            for i in range(m):
-                ranks[i] = prof_map.get(int(top[i]), zero)
-            doc_rank = np.arange(1, m + 1, dtype=np.int64)[:, None]
-            dist = np.where(ranks > 0, np.abs(doc_rank - ranks), k).sum(axis=0)
-            out.append(langs[int(np.argmin(dist))])
-        return pd.Series(out, dtype=object)
-
-    return docs.select(F.col(id_col), _predict(padded).alias("lang_pred"))
+    return docs.select(F.col(id_col), lang_ngram_predict_udf(k)(padded).alias("lang_pred"))
 
 
 def _lang_id_ngram_exchange(

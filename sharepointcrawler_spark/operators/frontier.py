@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from typing import Callable
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -73,8 +74,16 @@ def seed_frontier(spark: SparkSession, seeds: list[tuple[str, int]]) -> DataFram
     Seed path_key encodes the seed's list position so multi-seed crawls
     have a deterministic total order (seed order, then DFS within each).
     """
-    rows = [(u, p, i) for i, (u, p) in enumerate(seeds)]
-    df = spark.createDataFrame(rows, "url string, priority int, seed_idx int")
+    # from pandas: the Arrow path builds the frame in the JVM, where a
+    # Python list would cost a pickled-row Python task per partition
+    pdf = pd.DataFrame(
+        {
+            "url": [u for u, _ in seeds],
+            "priority": [p for _, p in seeds],
+            "seed_idx": range(len(seeds)),
+        }
+    )
+    df = spark.createDataFrame(pdf, "url string, priority int, seed_idx int")
     w = Window.partitionBy("url_canon").orderBy("seed_idx")
     return (
         df.withColumn("url_canon", canonicalize_url("url"))

@@ -71,12 +71,30 @@ class RobotsGate:
         # wins; allow beats deny on ties
         for h in rules:
             rules[h].sort(key=lambda t: (-len(t[0]), not t[1]))
-        self._b_rules = spark.sparkContext.broadcast(rules)
-        self.delays = delays
-        self._spark = spark
+        # without a deny rule every URL is allowed: no broadcast, no UDF
+        denies = any(not allow for rs in rules.values() for _, allow, _ in rs)
+        self._b_rules = spark.sparkContext.broadcast(rules) if denies else None
+        # built once, from pandas (Arrow: no Python worker when scanned);
+        # None when no host sets a crawl-delay
+        self._delays_df = (
+            spark.createDataFrame(
+                pd.DataFrame(
+                    {"host": list(delays), "crawl_delay_s": list(delays.values())}
+                ),
+                "host string, crawl_delay_s double",
+            )
+            if delays
+            else None
+        )
 
     def allowed_col(self, url_col: str | Column = "url_canon") -> Column:
+        """Boolean robots verdict per URL. A null URL is denied. With no
+        deny rule the verdict is a plain ``isNotNull`` (folded to true on
+        non-nullable columns), so the plan holds no Python UDF."""
+        c = F.col(url_col) if isinstance(url_col, str) else url_col
         b_rules = self._b_rules
+        if b_rules is None:
+            return c.isNotNull()
 
         @F.pandas_udf(T.BooleanType())
         def robots_allowed(urls: pd.Series) -> pd.Series:  # pragma: no cover
@@ -104,15 +122,13 @@ class RobotsGate:
 
             return urls.map(check)
 
-        c = F.col(url_col) if isinstance(url_col, str) else url_col
         return robots_allowed(c)
 
-    def delays_df(self) -> DataFrame:
-        """(host, crawl_delay_s) for the politeness scheduler."""
-        rows = [(h, d) for h, d in self.delays.items()]
-        if not rows:
-            return self._spark.createDataFrame([], "host string, crawl_delay_s double")
-        return self._spark.createDataFrame(rows, "host string, crawl_delay_s double")
+    def delays_df(self) -> DataFrame | None:
+        """(host, crawl_delay_s) for the politeness scheduler — the same
+        frame on every call, or None when no host sets a crawl-delay
+        (``assign_fetch_slots`` then applies its default delay)."""
+        return self._delays_df
 
 
 def apply_robots_gate(wave: DataFrame, gate: RobotsGate) -> tuple[DataFrame, DataFrame]:

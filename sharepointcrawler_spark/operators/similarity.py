@@ -677,10 +677,10 @@ def _iter_query_chunks(
     from sharepointcrawler_spark.plans.layout import estimated_size_bytes
 
     q = queries.select(query_id_col, query_vec_col)
-    target_parts = max(1, min(
-        q.rdd.getNumPartitions(), estimated_size_bytes(q) // (16 << 20) + 1
-    ))
-    if target_parts < q.rdd.getNumPartitions():
+    # one .rdd conversion: each one re-plans the query
+    n_parts = q.rdd.getNumPartitions()
+    target_parts = max(1, min(n_parts, estimated_size_bytes(q) // (16 << 20) + 1))
+    if target_parts < n_parts:
         q = q.coalesce(target_parts)
     buf_ids: list = []
     buf_vecs: list = []

@@ -36,12 +36,13 @@ from __future__ import annotations
 
 import os
 import time
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from sharepointcrawler_spark.operators import frontier as fr
 from sharepointcrawler_spark.operators import dedup as dd
@@ -68,6 +69,15 @@ from sharepointcrawler_spark.plans.snapshot import SnapshotStore
 # storage-only column marking which wave last touched a frontier row;
 # stripped before rows re-enter the pipeline
 DELTA_WAVE = "delta_wave"
+
+# schemas of the snapshot tables the crawl reads back: a read that names
+# its schema skips the parquet footer-inference job a bare read runs
+DELTA_SCHEMA = T.StructType(
+    fr.FRONTIER_SCHEMA.fields + [T.StructField(DELTA_WAVE, T.IntegerType(), False)]
+)
+SEEN_SCHEMA = "url_key long, url_canon string"
+FETCH_LOG_SCHEMA = "url_canon string, host string, wave_id int, fetch_slot double"
+ERRORS_SCHEMA = "wave_id int, url_canon string, host string, stage string, message string"
 
 
 @dataclass
@@ -131,14 +141,14 @@ def _merged_frontier(
     ``state=pending`` partition (sound because states are monotone); the
     caller still filters the merged view, because a delta may have
     terminalized a base-pending row."""
-    base = spark.read.parquet(base_path)
+    base = spark.read.schema(fr.FRONTIER_SCHEMA).parquet(base_path)
     if pending_only:
         base = base.filter(F.col("state") == fr.PENDING)
     cols = [f.name for f in fr.FRONTIER_SCHEMA.fields]
     merged = base.select(*cols).withColumn(DELTA_WAVE, F.lit(-1))
     for p in delta_paths:
         merged = merged.unionByName(
-            spark.read.parquet(p).select(*cols, DELTA_WAVE)
+            spark.read.schema(DELTA_SCHEMA).parquet(p).select(*cols, DELTA_WAVE)
         )
     if not delta_paths:
         return merged.drop(DELTA_WAVE)
@@ -163,7 +173,7 @@ def _read_seen(
     (wave, seen_bucket) are inferred — and unioned; a bucket filter
     pushes through the union into every scan as a partition filter."""
     if not bucketed:
-        return spark.read.parquet(base_path, *delta_paths)
+        return spark.read.schema(SEEN_SCHEMA).parquet(base_path, *delta_paths)
     # explicit schemas: a wave with zero new discoveries writes an
     # EMPTY partitioned delta (a _SUCCESS marker, no files), which has
     # no schema to infer
@@ -179,6 +189,35 @@ def _read_seen(
         )
         out = out.unionByName(deltas, allowMissingColumns=True)
     return out
+
+
+def _write_tables(
+    store: SnapshotStore,
+    wave: int,
+    tables: dict[str, tuple[DataFrame, str, str | None]],
+    then: Callable[[dict[str, Future]], dict] | None = None,
+) -> tuple[dict[str, str], dict | None]:
+    """Write independent snapshot tables CONCURRENTLY from driver threads.
+
+    ``tables`` maps a key to ``(df, table name, partition column or
+    None)``. Spark schedules concurrent jobs fine and each write targets
+    its own path; at toy scale each write job carries ~1-2 s of fixed
+    overhead, so overlapping them is most of a wave's write time (on a
+    cluster it overlaps commit latencies instead). ``then(futures)`` runs
+    in the same pool, so a job that needs one written table starts while
+    the others still write. Returns (path per key, ``then``'s result)."""
+    with ThreadPoolExecutor(max_workers=len(tables) + 1) as pool:
+        futures = {
+            key: (
+                pool.submit(store.write, df, name, wave)
+                if pcol is None
+                else pool.submit(store.write_partitioned, df, name, wave, pcol)
+            )
+            for key, (df, name, pcol) in tables.items()
+        }
+        after = pool.submit(then, futures) if then is not None else None
+        paths = {key: f.result() for key, f in futures.items()}
+        return paths, (after.result() if after is not None else None)
 
 
 def run_crawl(
@@ -287,7 +326,7 @@ def run_crawl(
         delta_paths = list(manifest["tables"].get("frontier_deltas", []))
         seen_base_path = manifest["tables"]["seen_base"]
         seen_delta_paths = list(manifest["tables"]["seen_deltas"])
-        shards = store.read("bloom_shards", last)
+        shards = store.read("bloom_shards", last, dd.BLOOM_SHARD_SCHEMA)
         wave = last
         if cfg.seen_buckets:
             # resuming a FLAT snapshot with buckets enabled would
@@ -342,32 +381,50 @@ def run_crawl(
             frontier0 = frontier0.unionByName(
                 sm_seeds.select([f.name for f in fr.FRONTIER_SCHEMA.fields])
             )
+        # the three wave-0 tables all derive from frontier0 (a Python
+        # UDF and a window): materialize it ONCE before the concurrent
+        # writes, which would otherwise each compute it before the
+        # cache fills
+        frontier0 = frontier0.persist()
+        frontier0.count()
         # seeds enter the seen-set immediately (they are scheduled)
         seed_seen = frontier0.select("url_key", "url_canon")
-        shards = dd.build_bloom_shards(
-            seed_seen, n_shards=cfg.n_bloom_shards, geometry=geometry
-        )
-        wave = 0
-        base_path = store.write_partitioned(frontier0, "frontier_base", 0)
-        delta_paths = []
-        store.write(shards, "bloom_shards", 0)
         if cfg.seen_buckets:
-            seen_base_path = store.write_partitioned(
+            seen_write = (
                 dd.with_seen_bucket(seed_seen, cfg.seen_buckets),
                 "seen",
-                0,
-                partition_col=dd.SEEN_BUCKET_COL,
+                dd.SEEN_BUCKET_COL,
             )
         else:
-            seen_base_path = store.write(seed_seen, "seen", 0)
+            seen_write = (seed_seen, "seen", None)
+        wave = 0
+        tables, _ = _write_tables(
+            store,
+            0,
+            {
+                "frontier_base": (frontier0, "frontier_base", "state"),
+                "bloom_shards": (
+                    dd.build_bloom_shards(
+                        seed_seen, n_shards=cfg.n_bloom_shards, geometry=geometry
+                    ),
+                    "bloom_shards",
+                    None,
+                ),
+                "seen": seen_write,
+            },
+        )
+        frontier0.unpersist()
+        base_path = tables["frontier_base"]
+        delta_paths = []
+        seen_base_path = tables["seen"]
         seen_delta_paths = []
+        # wave 1 probes the shards as written, like every later wave
+        shards = spark.read.schema(dd.BLOOM_SHARD_SCHEMA).parquet(tables["bloom_shards"])
         store.commit(
             0,
             {
-                "frontier_base": base_path,
+                **tables,
                 "frontier_deltas": [],
-                "bloom_shards": store.table_dir("bloom_shards", 0),
-                "seen": seen_base_path,
                 "seen_base": seen_base_path,
                 "seen_deltas": [],
             },
@@ -383,6 +440,7 @@ def run_crawl(
     # count rides the wave's single stats job instead). The disk deltas
     # are still written identically every wave, so a kill at ANY point
     # resumes from the same state as before.
+    delays = gate.delays_df()
     pending: DataFrame | None = None
     n_pending = 0
     retire: list[DataFrame] = []  # prior wave's persisted frames
@@ -457,7 +515,7 @@ def run_crawl(
         # scale, one-shuffle window for small waves)
         scheduled = assign_fetch_slots(
             allowed,
-            gate.delays_df(),
+            delays,
             cfg.default_crawl_delay_s,
             approx_rows=n_pending,
             group_col=pol_group,
@@ -590,11 +648,7 @@ def run_crawl(
         pending_next = nxt.localCheckpoint(eager=False)
 
         # the 4-5 snapshot tables are independent and their inputs are
-        # persisted: write them CONCURRENTLY from driver threads (Spark
-        # schedules concurrent jobs fine; each write targets its own
-        # path). At toy scale each write job carries ~1-2s of fixed
-        # overhead — overlapping them is most of the wave wall time; on
-        # a real cluster it overlaps commit latencies instead.
+        # persisted: write them concurrently (_write_tables)
         if cfg.seen_buckets:
             seen_write = (
                 dd.with_seen_bucket(seen_delta, cfg.seen_buckets),
@@ -636,41 +690,27 @@ def run_crawl(
         def _tag(df: DataFrame, key: str) -> DataFrame:
             return df.select(F.lit(key).alias("_k"))
 
-        with ThreadPoolExecutor(max_workers=len(to_write) + 1) as pool:
-            futures = {
-                key: (
-                    pool.submit(store.write, df, name, wave)
-                    if pcol is None
-                    else pool.submit(
-                        store.write_partitioned, df, name, wave, pcol
-                    )
-                )
-                for key, (df, name, pcol) in to_write.items()
+        def _stats_job(futures: dict[str, Future]) -> dict:
+            dp = futures["frontier_delta"].result()
+            delta_readback = spark.read.schema(DELTA_SCHEMA).parquet(dp).select(
+                F.concat(
+                    F.lit("delta_pid_"),
+                    F.spark_partition_id().cast("string"),
+                ).alias("_k")
+            )
+            return {
+                r["_k"]: r["n"]
+                for r in _tag(scheduled, "scheduled")
+                .unionAll(_tag(denied, "denied"))
+                .unionAll(_tag(seen_delta, "discovered_new"))
+                .unionAll(_tag(pending_next, "pending_next"))
+                .unionAll(delta_readback)
+                .groupBy("_k")
+                .agg(F.count("*").alias("n"))
+                .collect()
             }
 
-            def _stats_job() -> dict:
-                dp = futures["frontier_delta"].result()
-                delta_readback = spark.read.parquet(dp).select(
-                    F.concat(
-                        F.lit("delta_pid_"),
-                        F.spark_partition_id().cast("string"),
-                    ).alias("_k")
-                )
-                return {
-                    r["_k"]: r["n"]
-                    for r in _tag(scheduled, "scheduled")
-                    .unionAll(_tag(denied, "denied"))
-                    .unionAll(_tag(seen_delta, "discovered_new"))
-                    .unionAll(_tag(pending_next, "pending_next"))
-                    .unionAll(delta_readback)
-                    .groupBy("_k")
-                    .agg(F.count("*").alias("n"))
-                    .collect()
-                }
-
-            stats_future = pool.submit(_stats_job)
-            tables = {key: f.result() for key, f in futures.items()}
-            counts = stats_future.result()
+        tables, counts = _write_tables(store, wave, to_write, then=_stats_job)
         delta_path = tables["frontier_delta"]
         delta_paths = delta_paths + [delta_path]
         seen_delta_paths = seen_delta_paths + [tables["seen"]]
@@ -694,28 +734,37 @@ def run_crawl(
         #    rewrite_data_files story); deltas before it retire.
         compacted = False
         if cfg.compact_every and wave % cfg.compact_every == 0:
-            merged_full = _merged_frontier(spark, base_path, delta_paths)
-            base_path = store.write_partitioned(merged_full, "frontier_base", wave)
-            delta_paths = []
             # seen-set compaction on the same cadence: rewrite the union
             # as one base so per-wave reads stop unioning one directory
-            # per wave (the multi-path scan is O(waves since compaction))
+            # per wave (the multi-path scan is O(waves since compaction));
+            # the two base rewrites are independent and run concurrently
             merged_seen = _read_seen(
                 spark, seen_base_path, seen_delta_paths, bool(cfg.seen_buckets)
             )
-            if cfg.seen_buckets:
-                seen_base_path = store.write_partitioned(
-                    merged_seen, "seen_base", wave,
-                    partition_col=dd.SEEN_BUCKET_COL,
-                )
-            else:
-                seen_base_path = store.write(merged_seen, "seen_base", wave)
+            bases, _ = _write_tables(
+                store,
+                wave,
+                {
+                    "frontier_base": (
+                        _merged_frontier(spark, base_path, delta_paths),
+                        "frontier_base",
+                        "state",
+                    ),
+                    "seen_base": (
+                        merged_seen,
+                        "seen_base",
+                        dd.SEEN_BUCKET_COL if cfg.seen_buckets else None,
+                    ),
+                },
+            )
+            base_path, seen_base_path = bases["frontier_base"], bases["seen_base"]
+            delta_paths = []
             seen_delta_paths = []
             compacted = True
 
         # bloom shards re-read from the written snapshot: truncates
         # lineage across waves (deltas/base are re-read lazily anyway)
-        shards = spark.read.parquet(tables["bloom_shards"])
+        shards = spark.read.schema(dd.BLOOM_SHARD_SCHEMA).parquet(tables["bloom_shards"])
 
         t_writes = time.monotonic()
         stats = {
@@ -752,18 +801,16 @@ def run_crawl(
     seen_final = _read_seen(
         spark, seen_base_path, seen_delta_paths, bool(cfg.seen_buckets)
     )
-    fetch_log_final = store.read_appended("fetch_log", wave)
+    fetch_log_final = store.read_appended("fetch_log", wave, FETCH_LOG_SCHEMA)
     if fetch_log_final is None:
-        fetch_log_final = spark.createDataFrame(
-            [], "url_canon string, host string, wave_id int, fetch_slot double"
-        )
+        fetch_log_final = spark.createDataFrame([], FETCH_LOG_SCHEMA)
     return CrawlResult(
         waves=wave,
         frontier=frontier_final,
         seen=seen_final,
         fetch_log=fetch_log_final,
         metrics=metrics_all,
-        errors=store.read_appended("errors", wave),
+        errors=store.read_appended("errors", wave, ERRORS_SCHEMA),
     )
 
 
@@ -863,7 +910,7 @@ def _enqueue_pending_delta(
     wave = last + 1
     delta = refresh_rows.withColumn(DELTA_WAVE, F.lit(wave))
     delta_path = store.write(delta, "frontier_delta", wave)
-    n = spark.read.parquet(delta_path).count()
+    n = spark.read.schema(DELTA_SCHEMA).parquet(delta_path).count()
     # copy the seen state; the append-style 'seen' per-wave key is NOT
     # copied (read_appended over it would double-count the path)
     tables = {

@@ -31,10 +31,19 @@ import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class SnapshotStore:
     def __init__(self, spark: SparkSession, root: str):
+        # the writes' REBALANCE hint sizes files from actual bytes only
+        # under AQE; without it the hint is a plain shuffle into
+        # spark.sql.shuffle.partitions files per table per wave
+        if spark.conf.get("spark.sql.adaptive.enabled", "true").lower() != "true":
+            raise ValueError(
+                "SnapshotStore needs spark.sql.adaptive.enabled=true: its "
+                "REBALANCE write hint sizes files only under adaptive execution"
+            )
         self.spark = spark
         self.root = root
         os.makedirs(os.path.join(root, "_manifests"), exist_ok=True)
@@ -109,10 +118,17 @@ class SnapshotStore:
         pq.write_table(table, os.path.join(path, "part-0.parquet"))
         return path
 
-    def read(self, name: str, wave: int) -> DataFrame:
-        return self.spark.read.parquet(self.manifest(wave)["tables"][name])
+    def _reader(self, schema: StructType | str | None):
+        # a known schema skips the footer-inference job a bare read runs
+        r = self.spark.read
+        return r if schema is None else r.schema(schema)
 
-    def read_appended(self, name: str, upto_wave: int) -> DataFrame | None:
+    def read(self, name: str, wave: int, schema: StructType | str | None = None) -> DataFrame:
+        return self._reader(schema).parquet(self.manifest(wave)["tables"][name])
+
+    def read_appended(
+        self, name: str, upto_wave: int, schema: StructType | str | None = None
+    ) -> DataFrame | None:
         """Union of an append-style table across all committed waves <= k
         (parquet multi-path read — one scan, partition-pruned by path)."""
         paths = []
@@ -125,4 +141,4 @@ class SnapshotStore:
                     paths.append(p)
         if not paths:
             return None
-        return self.spark.read.parquet(*paths)
+        return self._reader(schema).parquet(*paths)

@@ -464,6 +464,17 @@ def test_lang_id_ngram_udf_matches_exchange_formulation(spark):
         assert new == old
 
 
+def test_lang_ngram_udf_zero_trigrams_is_und(spark):
+    """The UDF standalone: a non-null string too short to hold a
+    trigram carries no evidence and predicts 'und', like a null —
+    never the first language (lang_id_ngram itself always pads)."""
+    from sharepointcrawler_spark.functions.textanalysis import lang_ngram_predict_udf
+
+    df = spark.createDataFrame([("ab",), (None,), (" the ",)], "p string")
+    got = [r.lang for r in df.select(lang_ngram_predict_udf()("p").alias("lang")).collect()]
+    assert got == ["und", "und", "en"]
+
+
 # ---------------------------- production hash fast path (round 4)
 
 

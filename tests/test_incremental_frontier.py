@@ -102,3 +102,16 @@ def test_per_host_budget_defers_at_zero_delta_cost(spark, tmp_path):
     # deltas exactly twice (discovered + terminalized), seeds once
     total_delta = sum(m["delta_rows"] for m in ra.metrics)
     assert total_delta <= 2 * len(fa)
+
+
+def test_snapshot_store_requires_aqe(spark, tmp_path):
+    """The store's REBALANCE write hint needs adaptive execution: a
+    session with AQE off is refused up front."""
+    import pytest
+
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        with pytest.raises(ValueError, match="adaptive.enabled"):
+            SnapshotStore(spark, str(tmp_path / "snap"))
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")

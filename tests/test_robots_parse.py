@@ -165,3 +165,80 @@ def test_wildcard_rules_through_gate(spark):
         "https://w.com/tmp/scratch",
     }
     assert allowed.count() == 3
+
+
+def test_gate_without_deny_rules_is_a_plain_filter(spark):
+    """No deny rule (no robots table, or crawl-delay-only rules): every
+    URL is allowed, none denied, and the verdict is a JVM expression —
+    the plan holds no ``robots_allowed`` Python UDF."""
+    wave = spark.createDataFrame(
+        [("https://a.com/x",), ("https://b.com/private/y",)], ["url_canon"]
+    )
+    delay_only = spark.createDataFrame(
+        [("a.com", "allow", "", 3.0)],
+        "host string, rule_type string, path_prefix string, crawl_delay_s double",
+    )
+    for gate in (RobotsGate(spark, None), RobotsGate(spark, delay_only)):
+        allowed, denied = apply_robots_gate(wave, gate)
+        assert allowed.count() == 2 and denied.count() == 0
+        plan = allowed._jdf.queryExecution().analyzed().toString()
+        assert "robots_allowed" not in plan
+
+
+def test_gate_with_rules_denies_as_before(spark):
+    """With a deny rule the UDF gate decides per URL, as it always has:
+    longest pattern wins, unknown hosts pass, a null URL is denied."""
+    rules = spark.createDataFrame(
+        [("a.com", "deny", "/private/", None), ("a.com", "allow", "/private/ok", None)],
+        "host string, rule_type string, path_prefix string, crawl_delay_s double",
+    )
+    wave = spark.createDataFrame(
+        [
+            ("https://a.com/private/x",),
+            ("https://a.com/private/ok/y",),
+            ("https://a.com/public",),
+            ("https://b.com/private/x",),
+            (None,),
+        ],
+        "url_canon string",
+    )
+    allowed, denied = apply_robots_gate(wave, RobotsGate(spark, rules))
+    assert {r.url_canon for r in denied.collect()} == {"https://a.com/private/x", None}
+    assert {r.url_canon for r in allowed.collect()} == {
+        "https://a.com/private/ok/y",
+        "https://a.com/public",
+        "https://b.com/private/x",
+    }
+
+
+def test_delays_df_built_once_and_schedules_like_a_hand_built_table(spark):
+    """``delays_df()`` is None without crawl-delays; with them it is the
+    same frame on every call and spaces fetch slots exactly like a
+    hand-built (host, crawl_delay_s) table."""
+    from sharepointcrawler_spark.operators.politeness import assign_fetch_slots
+
+    assert RobotsGate(spark, None).delays_df() is None
+    rules = spark.createDataFrame(
+        [("a.com", "deny", "/tmp/", 2.5), ("b.com", "allow", "", 7.0)],
+        "host string, rule_type string, path_prefix string, crawl_delay_s double",
+    )
+    gate = RobotsGate(spark, rules)
+    assert gate.delays_df() is gate.delays_df()
+    wave = spark.createDataFrame(
+        [(h, i, f"{i:02d}") for h in ("a.com", "b.com", "c.com") for i in range(3)],
+        "host string, priority int, path_key string",
+    )
+    hand = spark.createDataFrame(
+        [("a.com", 2.5), ("b.com", 7.0)], "host string, crawl_delay_s double"
+    )
+
+    def slots(delays):
+        return sorted(
+            (r.host, r.path_key, r.fetch_slot)
+            for r in assign_fetch_slots(wave, delays, 1.0).collect()
+        )
+
+    assert slots(gate.delays_df()) == slots(hand)
+    assert slots(gate.delays_df())[:3] == [
+        ("a.com", "00", 0.0), ("a.com", "01", 2.5), ("a.com", "02", 5.0),
+    ]

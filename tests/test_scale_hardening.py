@@ -356,7 +356,12 @@ def test_wave_stats_run_as_single_action(spark, tmp_path, monkeypatch):
 
     The bloom crosses into Python once per wave: the planned bloom-shard
     and frontier-delta writes each hold exactly ONE
-    FlatMapCoGroupsInPandas node (the fused probe + shard update)."""
+    FlatMapCoGroupsInPandas node (the fused probe + shard update).
+
+    No row-free work: the resumed crawl builds no frame from a Python
+    list (a pickled-row Python task per partition), reads no parquet
+    table without its schema (a footer-inference job per read), and —
+    this crawl has no robots rules — plans no ``robots_allowed`` UDF."""
     from sharepointcrawler_spark.operators.frontier import graph_expander
     from sharepointcrawler_spark.plans.crawl import CrawlConfig, run_crawl
     from sharepointcrawler_spark.plans.snapshot import SnapshotStore
@@ -389,7 +394,28 @@ def test_wave_stats_run_as_single_action(spark, tmp_path, monkeypatch):
         calls["collect"] += 1
         return orig_collect(self)
 
+    Session, Reader = type(spark), type(spark.read)
+    orig_create, orig_schema, orig_parquet = (
+        Session.createDataFrame, Reader.schema, Reader.parquet,
+    )
+    row_free: dict[str, list] = {"list_frames": [], "inferred_reads": []}
+
+    def creating(self, data, *args, **kwargs):
+        if isinstance(data, list):
+            row_free["list_frames"].append(args[:1])
+        return orig_create(self, data, *args, **kwargs)
+
+    def with_schema(self, schema):
+        self._schema_given = True
+        return orig_schema(self, schema)
+
+    def reading(self, *paths, **kwargs):
+        if not getattr(self, "_schema_given", False):
+            row_free["inferred_reads"].append(paths)
+        return orig_parquet(self, *paths, **kwargs)
+
     cogroups: dict[str, list[set[str]]] = {"bloom_shards": [], "frontier_delta": []}
+    robots_udf_waves: list[int] = []
     orig_write = store.write
 
     def planned_write(df, name, wave, *args, **kwargs):
@@ -401,11 +427,16 @@ def test_wave_stats_run_as_single_action(spark, tmp_path, monkeypatch):
             cogroups[name].append(
                 set(re.findall(r"FlatMapCoGroupsInPandas [^(]*?(\w+)\(", plan))
             )
+            if name == "frontier_delta" and "robots_allowed" in plan:
+                robots_udf_waves.append(wave)
         return orig_write(df, name, wave, *args, **kwargs)
 
     monkeypatch.setattr(store, "write", planned_write)
     monkeypatch.setattr(DataFrame, "count", counting_count)
     monkeypatch.setattr(DataFrame, "collect", counting_collect)
+    monkeypatch.setattr(Session, "createDataFrame", creating)
+    monkeypatch.setattr(Reader, "schema", with_schema)
+    monkeypatch.setattr(Reader, "parquet", reading)
     res = run_crawl(
         spark, store, graph_expander(edges_df), config=cfg, resume=True,
     )
@@ -421,6 +452,8 @@ def test_wave_stats_run_as_single_action(spark, tmp_path, monkeypatch):
         "bloom_shards": [{"probe_absorb"}] * waves_tracked,
         "frontier_delta": [{"probe_absorb"}] * waves_tracked,
     }, cogroups
+    assert row_free == {"list_frames": [], "inferred_reads": []}, row_free
+    assert robots_udf_waves == [], robots_udf_waves
 
 
 # --------------------------------------- 6. near-dup component merge
